@@ -2292,7 +2292,19 @@ object TextAnalysis {
     * reference). Cost: O(applied · |word|) pair lookups per word —
     * independent of nMerges; at most |word|−1 merges can ever apply.
     */
-  def bpeSegment(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
+  def bpeSegment(docs: DataFrame, merges: Seq[(String, String)]): DataFrame =
+    // widen the scan (r21): the merge loop is the tokenizer's whole
+    // compute and runs inside an opaque mapPartitions — on a
+    // single-row-group fixture input it is ONE task. Scale.widen
+    // round-robins the narrow (doc_id, text) rows and NO-OPs on an
+    // already-wide cluster-scale input (SCALEPROBE_r21). bpeEncodeIds
+    // calls the kernel unwidened, so its plan stays a zero-exchange
+    // narrow projection (PlanSpec q121); measured 1.3-1.4x slower at
+    // sf0.1 on 4 cores than widened, see CHANGES.md.
+    segmentKernel(graft.util.Scale.widen(docs.select(col("doc_id"), col("text"))), merges)
+
+  /** The [[bpeSegment]] kernel over the (doc_id, text) rows as given. */
+  private def segmentKernel(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val table = merges.toArray
@@ -2303,15 +2315,7 @@ object TextAnalysis {
       merges.zipWithIndex.groupBy(_._1).map { case (p, rs) =>
         p -> rs.map(_._2).toArray.sorted
       }
-    // widen the scan (r21): the merge loop below is the tokenizer's
-    // whole compute and runs inside an opaque mapPartitions — on a
-    // single-row-group fixture input it is ONE task (JobProfile q121:
-    // 0.54 s + 0.67 s single-task jobs — the seg subtree evaluates once
-    // for the vocab and once for the encode). Scale.widen round-robins
-    // the narrow (doc_id, text) rows and NO-OPs on an already-wide
-    // cluster-scale input (SCALEPROBE_r21).
-    graft.util.Scale.widen(docs.select(col("doc_id"), col("text")))
-      .as[(Long, String)]
+    docs.as[(Long, String)]
       .mapPartitions(_.map { case (id, text) =>
         val pieces = scala.collection.mutable.ArrayBuffer.empty[String]
         for (w <- text.split(" ") if w.nonEmpty) {
@@ -2531,7 +2535,7 @@ object TextAnalysis {
     * TextAnalysisSpec.
     */
   def bpeEncodeIds(docs: DataFrame, merges: Seq[(String, String)]): DataFrame = {
-    val seg = bpeSegment(docs, merges)
+    val seg = segmentKernel(docs.select(col("doc_id"), col("text")), merges)
     val vocabMap = bpeVocab(seg).collect()
       .map(r => r.getString(0) -> r.getLong(2)).toMap
     encodeSegWithVocab(seg, vocabMap)

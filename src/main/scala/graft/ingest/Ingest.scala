@@ -12,7 +12,7 @@ import org.apache.spark.sql.types._
   * `includes.tweets[]`/`includes.users[]`, and `errors[]`. The reference
   * parses pages one at a time in driver Python and bulk-inserts with
   * `INSERT IGNORE` (first-wins PK dedup); here the whole ingest is one
-  * declarative job: schema'd permissive JSON scan (corrupt lines
+  * declarative program: schema'd permissive JSON scan (corrupt lines
   * quarantined, not fatal — S1), nested-struct flattening as pure column
   * expressions (P1/P2), URL unwind + in-text rewrite as a higher-order
   * fold (P3), entity explosion (P4), referenced-tweet demux (P5),
@@ -210,14 +210,27 @@ object Ingest {
   }
 
   /** Full ingest: pages → deduped tweets/users + exploded entity tables
-    * + corrupt-line quarantine. One declarative job per output; Catalyst
-    * prunes the page struct down to the fields each output needs.
+    * + corrupt-line quarantine.
+    *
+    * Two multi-consumer relations are materialized where they are
+    * derived, each with a lazy `localCheckpoint(eager = false)` (the
+    * idiom of `Closure.resolveLoop`): the parsed pages (original ∪
+    * expansion), read by all six outputs and the mention map, and the
+    * deduped tweets, read by every downstream pipeline stage. The first
+    * consumer computes the blocks and every later one reads them, so the
+    * JSONL is scanned and parsed once per load instead of once per
+    * output; the price is that the page struct is kept whole rather than
+    * pruned per output. The checkpoint cuts the lineage, so a lost
+    * executor fails the job instead of recomputing (as in `Closure`);
+    * the blocks are freed by the `ContextCleaner` once the outputs are
+    * unreachable.
     */
   def load(spark: SparkSession, originalPaths: Seq[String],
            expansionPaths: Seq[String] = Seq.empty): Loaded = {
     val pages0 = readPages(spark, originalPaths, original = true)
-    val pages = if (expansionPaths.isEmpty) pages0
-      else pages0.unionByName(readPages(spark, expansionPaths, original = false))
+    val pages = (if (expansionPaths.isEmpty) pages0
+      else pages0.unionByName(readPages(spark, expansionPaths, original = false)))
+      .localCheckpoint(eager = false)
 
     // the projection must reference at least one data column besides the
     // corrupt-record column (Spark disallows corrupt-only queries on raw
@@ -274,6 +287,8 @@ object Ingest {
       .withColumn("hashtags", when(col("hashtag_list").isNull, lit(null)).otherwise(size(col("hashtag_list"))))
       .withColumn("urls", when(col("url_list").isNull, lit(null)).otherwise(size(col("url_list"))))
       .withColumn("mentions", when(col("mention_list").isNull, lit(null)).otherwise(size(col("mention_list"))))
+      .drop("hashtag_list", "url_list", "mention_list")
+      .localCheckpoint(eager = false)
 
     // entity child tables (UDTF-explode, `:388-396`): exploded from EVERY
     // arriving tweet copy (the reference inserts entities before tweet-
@@ -283,8 +298,6 @@ object Ingest {
     val hashtags = childTable("hashtag_list", "hashtag")
     val urls = childTable("url_list", "url")
     val mentions = childTable("mention_list", "user_id")
-
-    val tweetsFinal = tweets.drop("hashtag_list", "url_list", "mention_list")
 
     // users: includes.users[] + error placeholders (`:325-329`)
     val realUsers = ok.select(
@@ -331,6 +344,6 @@ object Ingest {
       realUsers.unionByName(inReplyToErrors).unionByName(mentionErrors),
       "user_id").drop("original")
 
-    Loaded(tweetsFinal, users, hashtags, urls, mentions, corrupt)
+    Loaded(tweets, users, hashtags, urls, mentions, corrupt)
   }
 }

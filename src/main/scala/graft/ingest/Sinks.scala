@@ -5,8 +5,6 @@ import org.apache.spark.sql.functions.col
 
 /** Sink surface of the reference pipeline (SURVEY §2.2), Spark-first:
   *
-  *  - K1 JSONL append sink (`fetch_conversation_tweets.py:75-77`) →
-  *    `write.mode(append).json` — per-page flush becomes per-task file.
   *  - K3 error-log sink (`:87-98`) → quarantine DataFrame written beside
   *    the output instead of an unstructured log.
   *  - K4 id-list text sink (`extract_conversation_ids.py:34-37`).
@@ -20,10 +18,6 @@ import org.apache.spark.sql.functions.col
   *    bought the reference.
   */
 object Sinks {
-
-  /** K1: newline-delimited JSON, append-mode (crawler page log shape). */
-  def appendJsonl(df: DataFrame, dir: String): Unit =
-    df.write.mode("append").json(dir)
 
   /** K3: quarantine sink for corrupt/error rows. */
   def quarantine(df: DataFrame, dir: String): Unit =

@@ -21,7 +21,21 @@ import graft.stats.{TreeInput, TreeStats}
   *
   * The reference runs these as six separate driver scripts against
   * MariaDB with per-conversation round trips; here each stage is a
-  * DataFrame and only the final marts materialize.
+  * DataFrame, and each multi-consumer stage output is materialized once
+  * at its boundary with a lazy `localCheckpoint(eager = false)`:
+  *
+  *  - the parsed pages (`Ingest.load`), read by all six ingest outputs;
+  *  - the deduped tweets (`Ingest.load`), read by ids, edges and closure;
+  *  - the ur-enriched tweets, read by stats, `tweets_i`, the wide mart
+  *    and both rollups;
+  *  - the tree stats, read by `tweet_stats_i` and `tweets_a`.
+  *
+  * The first consumer computes the blocks and every later one reads
+  * them, so the 11 sinks of [[write]] no longer re-derive their whole
+  * lineage from the JSONL. Trade-off: the cut lineage means a lost
+  * executor fails the job instead of recomputing (as in `Closure`); the
+  * blocks are freed by the `ContextCleaner` once the outputs are
+  * unreachable.
   */
 object ConvoyPipeline {
 
@@ -82,7 +96,7 @@ object ConvoyPipeline {
     // stage 3: conversation→conversation edges from quote/retweet links
     val edges = conversationEdges(tweets)
     val withUr = Closure.enrich(tweets.drop("ur_conversation_id"), edges,
-      "conversation_id")
+      "conversation_id").localCheckpoint(eager = false)
 
     // stage 4: tree statistics (singleton fast path handled in-operator).
     // Error-placeholder tweets have NULL conversation ids and get no
@@ -96,7 +110,7 @@ object ConvoyPipeline {
       coalesce(col("like_count"), lit(0L)).as("like_count"),
       coalesce(col("retweet_count"), lit(0L)).as("retweet_count"),
       col("ur_conversation_id").as("group_id")).as[TreeInput]
-    val tweetStats = TreeStats.compute(statsInput).toDF()
+    val tweetStats = TreeStats.compute(statsInput).toDF().localCheckpoint(eager = false)
 
     // stages 5-6: marts
     val wide = Mart.tweetsWide(withUr, tweetStats)

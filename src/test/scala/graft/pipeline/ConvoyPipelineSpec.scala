@@ -1,8 +1,12 @@
 package graft.pipeline
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 
 import graft.SparkSuite
+import graft.tools.PageCorpus
 
 /** Full-pipeline test over the JSONL fixture: every stage produces the
   * expected relations and the marts land on disk (S2/K4 round trip
@@ -95,5 +99,38 @@ class ConvoyPipelineSpec extends SparkSuite {
       .collect().map(_.getString(0).toLong).toSet
     assert(ids == Set(100L, 50L))
     assert(spark.read.parquet(s"$dir/_quarantine").count() == 1)
+  }
+
+  test("each stage is derived once: the pages are scanned once per run, not once per sink") {
+    // collects the file-scan RDDs of every submitted stage: a stage that
+    // re-derives the pages plans a fresh scan RDD, while one that reads
+    // the materialized pages reaches at most the already-computed one
+    // (until its lineage is cut). A marker job flushes the listener
+    // queue, whose events arrive in order.
+    val scans = ConcurrentHashMap.newKeySet[Int]()
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.filter(_.name == "FileScanRDD").foreach(r => scans.add(r.id))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("graft.scanCountMarker") != null)
+          flushed.countDown()
+    }
+    val sc = spark.sparkContext
+    val dir = Files.createTempDirectory("pipeline_scans").toString
+    sc.addSparkListener(listener)
+    try {
+      ConvoyPipeline.write(ConvoyPipeline.run(spark,
+        Seq(resource("pages_original.jsonl")), Seq(resource("pages_expansion.jsonl"))), dir)
+      sc.setLocalProperty("graft.scanCountMarker", "1")
+      try spark.range(1).count() finally sc.setLocalProperty("graft.scanCountMarker", null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener queue did not drain")
+    } finally sc.removeSparkListener(listener)
+    // one scan of the original pages, one of the expansion pages
+    assert(scans.size == 2, s"page files scanned ${scans.size} times")
+  }
+
+  test("a materialized stage boundary reads back the same on every read") {
+    assert(PageCorpus.tableHash(out.tweets) == PageCorpus.tableHash(out.tweets))
   }
 }
