@@ -65,7 +65,10 @@ object Closure {
       // the logical plan stays O(1) instead of growing with iterations).
       // The probe checks STAGE-1 jumps only — if no pointer moved in the
       // first doubling, m was already fully converged and the second
-      // doubling was a no-op too.
+      // doubling was a no-op too. No `limit(1)` on the probe: codegen
+      // names each LimitExec's counter from a JVM-wide sequence, so a
+      // limited probe is fresh Java source every round that no codegen
+      // cache can reuse, and the checkpoint reads every partition anyway.
       val next = m1.as("a")
         .join(m1.as("b"), col("a.anc") === col("b.id"), "left")
         .select(
@@ -73,7 +76,7 @@ object Closure {
           coalesce(col("b.anc"), col("a.anc")).as("anc"),
           col("a._jumped"))
         .localCheckpoint(false)
-      changed = next.where(col("_jumped")).limit(1).count()
+      changed = next.where(col("_jumped")).count()
       m = next.drop("_jumped")
       iter += 1
     }

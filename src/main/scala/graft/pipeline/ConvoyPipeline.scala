@@ -1,5 +1,7 @@
 package graft.pipeline
 
+import java.util.concurrent.{Callable, ExecutionException, Executors, TimeUnit}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,6 +38,12 @@ import graft.stats.{TreeInput, TreeStats}
   * executor fails the job instead of recomputing (as in `Closure`); the
   * blocks are freed by the `ContextCleaner` once the outputs are
   * unreachable.
+  *
+  * [[write]] runs the 11 sinks concurrently, one thread each, so their
+  * per-job driver work (planning, codegen, scheduling) overlaps on idle
+  * cores instead of running one sink at a time. A boundary block is
+  * still computed once: the block write lock makes concurrent readers
+  * wait for the first writer.
   */
 object ConvoyPipeline {
 
@@ -123,18 +131,51 @@ object ConvoyPipeline {
   }
 
   /** Stage 7: materialize every mart as columnar parquet (K7/K8), sorted
-    * on the hot keys the reference indexed. */
+    * on the hot keys the reference indexed.
+    *
+    * The 11 sinks run concurrently, each on its own thread of a pool
+    * this call creates and shuts down. The threads are created by the
+    * calling thread, so every sink job inherits the caller's Spark local
+    * properties (job group, scheduler pool, any span key a listener
+    * attributes jobs by). Failure contract: `write` waits for every sink
+    * to finish, even when one fails or the caller is interrupted, then
+    * rethrows the first failure in sink order (the sink's own exception,
+    * not an `ExecutionException`) with any later failures attached as
+    * suppressed. It never returns while a sink is still writing.
+    */
   def write(out: Outputs, dir: String): Unit = {
-    Sinks.idList(out.conversationIds, "conversation_id", s"$dir/conversation_ids")
-    Sinks.mart(out.tweets, s"$dir/tweets_i", sortCols = Seq("ur_conversation_id", "tweet_id"))
-    Sinks.mart(out.users, s"$dir/users_a", sortCols = Seq("user_id"))
-    Sinks.mart(out.hashtags, s"$dir/tweet_hashtags_a", sortCols = Seq("hashtag", "tweet_id"))
-    Sinks.mart(out.urls, s"$dir/tweet_urls_a", sortCols = Seq("url", "tweet_id"))
-    Sinks.mart(out.mentions, s"$dir/tweet_mentions_a", sortCols = Seq("user_id", "tweet_id"))
-    Sinks.mart(out.tweetStats, s"$dir/tweet_stats_i", sortCols = Seq("tweet_id"))
-    Sinks.mart(out.tweetsWide, s"$dir/tweets_a", sortCols = Seq("created_date"))
-    Sinks.mart(out.conversations, s"$dir/conversations_a")
-    Sinks.mart(out.urConversations, s"$dir/ur_conversations_a")
-    Sinks.quarantine(out.corrupt, s"$dir/_quarantine")
+    val sinks: Seq[() => Unit] = Seq(
+      () => Sinks.idList(out.conversationIds, "conversation_id", s"$dir/conversation_ids"),
+      () => Sinks.mart(out.tweets, s"$dir/tweets_i", sortCols = Seq("ur_conversation_id", "tweet_id")),
+      () => Sinks.mart(out.users, s"$dir/users_a", sortCols = Seq("user_id")),
+      () => Sinks.mart(out.hashtags, s"$dir/tweet_hashtags_a", sortCols = Seq("hashtag", "tweet_id")),
+      () => Sinks.mart(out.urls, s"$dir/tweet_urls_a", sortCols = Seq("url", "tweet_id")),
+      () => Sinks.mart(out.mentions, s"$dir/tweet_mentions_a", sortCols = Seq("user_id", "tweet_id")),
+      () => Sinks.mart(out.tweetStats, s"$dir/tweet_stats_i", sortCols = Seq("tweet_id")),
+      () => Sinks.mart(out.tweetsWide, s"$dir/tweets_a", sortCols = Seq("created_date")),
+      () => Sinks.mart(out.conversations, s"$dir/conversations_a"),
+      () => Sinks.mart(out.urConversations, s"$dir/ur_conversations_a"),
+      () => Sinks.quarantine(out.corrupt, s"$dir/_quarantine"))
+    // a pool of its own, never a shared one: a worker thread inherits
+    // local properties only from the thread that creates it, and
+    // `submit` creates each worker on this thread
+    val pool = Executors.newFixedThreadPool(sinks.size)
+    try {
+      val pending = sinks.map(sink => pool.submit(new Callable[Unit] { def call(): Unit = sink() }))
+      val failures = pending.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally {
+      pool.shutdown()
+      var interrupted = false
+      while (!pool.isTerminated)
+        try pool.awaitTermination(1, TimeUnit.MINUTES)
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread.interrupt()
+    }
   }
 }

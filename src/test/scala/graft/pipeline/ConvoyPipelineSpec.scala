@@ -1,9 +1,12 @@
 package graft.pipeline
 
-import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, ExecutionException, TimeUnit}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
+import org.apache.spark.sql.functions.{col, lit, raise_error}
 
 import graft.SparkSuite
 import graft.tools.PageCorpus
@@ -101,36 +104,95 @@ class ConvoyPipelineSpec extends SparkSuite {
     assert(spark.read.parquet(s"$dir/_quarantine").count() == 1)
   }
 
+  private val FlushMarker = "graft.flushMarker"
+
+  /** Runs `body` with `listener` registered and returns once the
+    * listener has seen every event `body` caused: a marker job (local
+    * property `FlushMarker`) flushes the listener queue, whose events
+    * arrive in order. */
+  private def listening(listener: SparkListener)(body: => Unit): Unit = {
+    val flushed = new CountDownLatch(1)
+    val marker = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(FlushMarker) != null) flushed.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.addSparkListener(marker)
+    try {
+      body
+      sc.setLocalProperty(FlushMarker, "1")
+      try spark.range(1).count() finally sc.setLocalProperty(FlushMarker, null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener queue did not drain")
+    } finally {
+      sc.removeSparkListener(marker)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("each stage is derived once: the pages are scanned once per run, not once per sink") {
     // collects the file-scan RDDs of every submitted stage: a stage that
     // re-derives the pages plans a fresh scan RDD, while one that reads
     // the materialized pages reaches at most the already-computed one
-    // (until its lineage is cut). A marker job flushes the listener
-    // queue, whose events arrive in order.
+    // (until its lineage is cut)
     val scans = ConcurrentHashMap.newKeySet[Int]()
-    val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
+    val dir = Files.createTempDirectory("pipeline_scans").toString
+    listening(new SparkListener {
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
         e.stageInfo.rddInfos.filter(_.name == "FileScanRDD").foreach(r => scans.add(r.id))
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty("graft.scanCountMarker") != null)
-          flushed.countDown()
-    }
-    val sc = spark.sparkContext
-    val dir = Files.createTempDirectory("pipeline_scans").toString
-    sc.addSparkListener(listener)
-    try {
+    }) {
       ConvoyPipeline.write(ConvoyPipeline.run(spark,
         Seq(resource("pages_original.jsonl")), Seq(resource("pages_expansion.jsonl"))), dir)
-      sc.setLocalProperty("graft.scanCountMarker", "1")
-      try spark.range(1).count() finally sc.setLocalProperty("graft.scanCountMarker", null)
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener queue did not drain")
-    } finally sc.removeSparkListener(listener)
+    }
     // one scan of the original pages, one of the expansion pages
     assert(scans.size == 2, s"page files scanned ${scans.size} times")
   }
 
   test("a materialized stage boundary reads back the same on every read") {
     assert(PageCorpus.tableHash(out.tweets) == PageCorpus.tableHash(out.tweets))
+  }
+
+  test("concurrent sinks inherit the caller's local properties: every write job carries its job group") {
+    // a job without the group ran on a thread that did not inherit it
+    // from this call (a pooled thread created earlier keeps the
+    // properties of its creator, hence two calls with two groups)
+    val written = out // build the outputs (run submits jobs too) before listening
+    val sc = spark.sparkContext
+    Seq("convoy-write-1", "convoy-write-2").foreach { group =>
+      val seen = new ConcurrentLinkedQueue[String]()
+      val dir = Files.createTempDirectory("pipeline_group").toString
+      listening(new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (e.properties.getProperty(FlushMarker) == null)
+            seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+      }) {
+        sc.setJobGroup(group, "ConvoyPipelineSpec")
+        try ConvoyPipeline.write(written, dir) finally sc.clearJobGroup()
+      }
+      assert(seen.size >= 11, s"only ${seen.size} write jobs seen")
+      assert(seen.asScala.forall(_ == group), seen.asScala.toSeq.distinct.mkString(", "))
+    }
+  }
+
+  test("a failing sink: write waits for the others, rethrows the first failure unwrapped, later ones suppressed") {
+    // carries the sort columns of both replaced sinks; fails per row at run time
+    def failing(msg: String) = spark.range(4).select(
+      raise_error(lit(msg)).cast("long").as("user_id"), lit("u").as("url"), col("id").as("tweet_id"))
+    val planted = out.copy(users = failing("planted users failure"),
+      urls = failing("planted urls failure"))
+    val dir = Files.createTempDirectory("pipeline_fail").toString
+    val e = intercept[Throwable](ConvoyPipeline.write(planted, dir))
+    assert(!e.isInstanceOf[ExecutionException])
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(String.valueOf(_)).mkString("\n")
+    assert(messages(e).contains("planted users failure"), messages(e))
+    // Spark attaches a suppressed caller-stack trace of its own
+    assert(e.getSuppressed.exists(messages(_).contains("planted urls failure")),
+      e.getSuppressed.map(messages).mkString("\n"))
+    val done = Seq("conversation_ids", "tweets_i", "tweet_hashtags_a", "tweet_mentions_a",
+      "tweet_stats_i", "tweets_a", "conversations_a", "ur_conversations_a", "_quarantine")
+    done.foreach(d => assert(Files.exists(Paths.get(dir, d, "_SUCCESS")), s"$d not written"))
+    Seq("users_a", "tweet_urls_a").foreach(d =>
+      assert(!Files.exists(Paths.get(dir, d, "_SUCCESS")), s"$d committed"))
   }
 }
