@@ -1,7 +1,10 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 /** Iterative transitive closure to forest roots ("ur-conversation"
   * resolution).
@@ -14,12 +17,27 @@ import org.apache.spark.sql.functions._
   *
   * Spark-first design notes (100 TB):
   *  - Pointer jumping (`anc := anc.anc`) doubles resolved path length per
-  *    iteration, so convergence takes O(log2(max depth)) shuffle joins —
-  *    the reference's single-step `UPDATE` loop is O(depth).
-  *  - `localCheckpoint(eager = true)` after each iteration cuts the
-  *    exponentially growing lineage, otherwise replanning cost dominates.
-  *  - The join key (`anc`) is the shuffle key each round; AQE handles the
+  *    doubling, so convergence takes O(log2(max depth)) rounds — the
+  *    reference's single-step `UPDATE` loop is O(depth). A round is two
+  *    doublings followed by one probe.
+  *  - One job materializes the edge map (lazy `localCheckpoint`) and
+  *    counts its rows. A map of at most
+  *    `spark.sql.autoBroadcastJoinThreshold` bytes (rows × the schema's
+  *    default row size — the bound under which Spark already collects a
+  *    relation to the driver for a broadcast join) is collected and
+  *    resolved on the driver over an id→row hash map, and comes back as a
+  *    local relation with the input's column types. Only integral and
+  *    plain string ids take this path: their JVM equality is the join's.
+  *  - Larger maps, a threshold of `-1` and other id types run the Spark
+  *    loop: each round's two self-joins are checkpointed lazily
+  *    (`localCheckpoint(eager = false)`), so the round's probe is the job
+  *    that materializes it and the lineage stays O(1) across rounds. The
+  *    join key (`anc`) is the shuffle key each round; AQE handles the
   *    shrinking change-set by coalescing partitions.
+  *  - Both paths follow the same schedule — two doublings per round, stop
+  *    once a round's second doubling moves no pointer or after `maxIter`
+  *    rounds — and SQL's join semantics (a null `id` or `anc` never
+  *    matches), so they return the same rows, cycles included.
   *  - The reference has no cycle guard (mutual quotes would hang it); we
   *    stop at `maxIter` and leave remaining cycle members pointing at
   *    their current ancestor, which is deterministic because the jump is.
@@ -29,15 +47,60 @@ object Closure {
   /** edges: (id, parent) with at most one parent per id (a forest, except
     * for possible cycles). Returns (id, root) for every id that appears
     * as a child; roots themselves are absent (as in the reference map).
+    * The driver path rejects a duplicate id with an
+    * `IllegalArgumentException`.
     */
   def resolveRoots(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val m0 = edges.select(col("id"), col("parent").as("anc")).localCheckpoint(true)
-    // loop width sized to the map volume; AQE off in the narrow regime
-    // so each round's probe is one job, not one per query stage (r21 —
-    // Scale.withSizedLoopConfs; cluster scale: confs untouched)
-    graft.util.Scale.withSizedLoopConfs(m0.sparkSession, m0.count()) { _ =>
-      resolveLoop(m0, maxIter)
+    val m0 = edges.select(col("id"), col("parent").as("anc")).localCheckpoint(false)
+    val spark = m0.sparkSession
+    val rows = m0.queryExecution.toRdd.count()
+    val bytes = rows * m0.schema.map(_.dataType.defaultSize.toLong).sum
+    val driverKeys = m0.schema.map(_.dataType).distinct match {
+      case Seq(ByteType | ShortType | IntegerType | LongType | StringType) => true
+      case _ => false
     }
+    if (driverKeys && bytes <= spark.sessionState.conf.autoBroadcastJoinThreshold)
+      resolveOnDriver(m0, maxIter)
+    else {
+      // loop width sized to the map volume; AQE off in the narrow regime
+      // so each round's probe is one job, not one per query stage (r21 —
+      // Scale.withSizedLoopConfs; cluster scale: confs untouched)
+      graft.util.Scale.withSizedLoopConfs(spark, rows) { _ => resolveLoop(m0, maxIter) }
+    }
+  }
+
+  /** [[resolveLoop]]'s schedule over the collected map. `cur(i)` is the
+    * row whose parent is row i's current pointer; `next(r)` is the row a
+    * pointer at row r's parent jumps to — the row with that id, if its
+    * own parent is not null — or -1 where the join finds no match. */
+  private def resolveOnDriver(m0: DataFrame, maxIter: Int): DataFrame = {
+    val rows = m0.collect()
+    val index = new java.util.HashMap[Any, Integer](rows.length * 2)
+    for (i <- rows.indices if !rows(i).isNullAt(0)) {
+      val id = rows(i).get(0)
+      if (index.put(id, i) != null) throw new IllegalArgumentException(
+        s"Closure.resolveRoots: id $id has more than one parent row")
+    }
+    val next = rows.map { r =>
+      val j = if (r.isNullAt(1)) null else index.get(r.get(1))
+      if (j == null || rows(j).isNullAt(1)) -1 else j.intValue
+    }
+    // one doubling: every pointer reads the previous generation, as the
+    // self-join does; returns the new generation and its jump count
+    def double(cur: Array[Int]): (Array[Int], Long) =
+      (cur.map(c => if (next(c) < 0) c else cur(next(c))), cur.count(next(_) >= 0).toLong)
+    var cur = Array.range(0, rows.length)
+    var iter = 0
+    var changed = 1L
+    while (changed > 0 && iter < maxIter) {
+      val (c2, jumps) = double(double(cur)._1)
+      cur = c2
+      changed = jumps
+      iter += 1
+    }
+    val out = rows.indices.map(i => Row(rows(i).get(0), rows(cur(i)).get(1)))
+    val schema = StructType(Seq(m0.schema("id"), m0.schema("anc").copy(name = "root")))
+    m0.sparkSession.createDataFrame(out.asJava, schema)
   }
 
   private def resolveLoop(m0: DataFrame, maxIter: Int): DataFrame = {
@@ -56,81 +119,29 @@ object Closure {
       // round cost more than the one probe job they save; reverted.)
       val m1 = m.as("a")
         .join(m.as("b"), col("a.anc") === col("b.id"), "left")
-        .select(
-          col("a.id"),
-          coalesce(col("b.anc"), col("a.anc")).as("anc"),
-          col("b.anc").isNotNull.as("_jumped"))
+        .select(col("a.id"), coalesce(col("b.anc"), col("a.anc")).as("anc"))
       // Lazy checkpoint: the convergence probe below is the job that
       // materializes this iteration's result (one job per iteration, and
       // the logical plan stays O(1) instead of growing with iterations).
-      // The probe checks STAGE-1 jumps only — if no pointer moved in the
-      // first doubling, m was already fully converged and the second
-      // doubling was a no-op too. No `limit(1)` on the probe: codegen
-      // names each LimitExec's counter from a JVM-wide sequence, so a
-      // limited probe is fresh Java source every round that no codegen
-      // cache can reuse, and the checkpoint reads every partition anyway.
+      // The probe counts SECOND-doubling jumps: if none moved, every
+      // pointer already sits on a root, so a round whose first doubling
+      // made the last jump needs no trailing no-op round. No `limit(1)`
+      // on the probe: codegen names each LimitExec's counter from a
+      // JVM-wide sequence, so a limited probe is fresh Java source every
+      // round that no codegen cache can reuse, and the checkpoint reads
+      // every partition anyway.
       val next = m1.as("a")
         .join(m1.as("b"), col("a.anc") === col("b.id"), "left")
         .select(
           col("a.id"),
           coalesce(col("b.anc"), col("a.anc")).as("anc"),
-          col("a._jumped"))
+          col("b.anc").isNotNull.as("_jumped"))
         .localCheckpoint(false)
       changed = next.where(col("_jumped")).count()
       m = next.drop("_jumped")
       iter += 1
     }
     m.withColumnRenamed("anc", "root")
-  }
-
-  /** Frontier-shrinking variant of [[resolveRoots]]: a row is *settled*
-    * the moment its pointer lands on a root (no incoming map row) or on
-    * an already-settled row (whose pointer is final by induction).
-    * Settled rows leave the probe side, so late iterations touch only
-    * the deep-chain tail instead of the whole relation — the work saver
-    * at 100 TB where most chains are short and a few are very deep.
-    *
-    * Note: unions of same-lineage checkpointed parts trip Catalyst's
-    * union constraint rewriting (AttributeMap key-not-found), so
-    * constraint propagation is disabled for the duration of the loop —
-    * these tiny iteration plans gain nothing from it anyway.
-    */
-  def resolveRootsFrontier(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
-    val confKey = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.getOption(confKey)
-    spark.conf.set(confKey, "false")
-    try {
-      var active = edges
-        .select(col("id"), col("parent").as("anc"), lit(false).as("settled"))
-        .localCheckpoint(true)
-      var settledParts: List[DataFrame] = Nil
-      var iter = 0
-      var activeCount = active.count()
-      while (activeCount > 0 && iter < maxIter) {
-        val target = (settledParts :+ active).map(_.toDF("id", "anc", "settled"))
-          .reduce(_ unionByName _)
-        val next = active.as("a")
-          .join(target.as("b"), col("a.anc") === col("b.id"), "left")
-          .select(
-            col("a.id"),
-            coalesce(col("b.anc"), col("a.anc")).as("anc"),
-            (col("b.id").isNull || col("b.settled")).as("settled"))
-          .localCheckpoint(false)
-        active = next.where(!col("settled"))
-        settledParts ::= next.where(col("settled"))
-        activeCount = active.count()
-        iter += 1
-      }
-      // cycle survivors (never settle) keep their current ancestor
-      (settledParts :+ active).map(_.toDF("id", "anc", "settled"))
-        .reduce(_ unionByName _)
-        .select(col("id"), col("anc").as("root"))
-        .localCheckpoint(true)
-    } finally prev match {
-      case Some(v) => spark.conf.set(confKey, v)
-      case None => spark.conf.unset(confKey)
-    }
   }
 
   /** INCREMENTAL root maintenance: extend a settled root map with an

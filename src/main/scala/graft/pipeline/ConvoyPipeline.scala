@@ -65,7 +65,9 @@ object ConvoyPipeline {
     * operator should be total, so we instead collapse deterministically
     * to one parent per id — quote edges win over retweet edges, then the
     * smallest parent id — which also satisfies `Closure.resolveRoots`'
-    * one-parent-per-id precondition.
+    * one-parent-per-id precondition. The pick is two plain `min`s (the
+    * smallest quote parent, else the smallest parent), so it plans as a
+    * hash aggregate; `parent` is never null after the self-edge filter.
     */
   def conversationEdges(tweets: DataFrame): DataFrame = {
     val t = tweets.select("tweet_id", "conversation_id", "in_reply_to",
@@ -83,8 +85,8 @@ object ConvoyPipeline {
       .union(edgesVia("retweet_of", prio = 1, replyGuard = false))
       .where(col("id") =!= col("parent"))
       .groupBy(col("id"))
-      .agg(min(struct(col("_prio"), col("parent"))).as("_best"))
-      .select(col("id"), col("_best.parent").as("parent"))
+      .agg(coalesce(min(when(col("_prio") === 0, col("parent"))), min(col("parent")))
+        .as("parent"))
   }
 
   def run(spark: SparkSession, originalPaths: Seq[String],
@@ -101,7 +103,9 @@ object ConvoyPipeline {
       .groupBy(col("conversation_id")).agg(sum(col("reply_count")).as("replies"))
       .select(col("conversation_id"))
 
-    // stage 3: conversation→conversation edges from quote/retweet links
+    // stage 3: conversation→conversation edges from quote/retweet links;
+    // a map under the broadcast threshold resolves on the driver in one
+    // pass (Closure.resolveRoots), without joins or session conf changes
     val edges = conversationEdges(tweets)
     val withUr = Closure.enrich(tweets.drop("ur_conversation_id"), edges,
       "conversation_id").localCheckpoint(eager = false)

@@ -194,8 +194,8 @@ object TreeStatsIterative {
     // parts(k) holds pairs of depth in ((2^(k-1)), 2^k]; jumps = exact-2^i
     // ancestor pointers. New pairs (2^i, 2^(i+1)] decompose uniquely as
     // exact-2^i jump + known ≤2^i path, so no dedup pass is ever needed.
-    // Same-lineage checkpoint unions trip Catalyst's union constraint
-    // rewrite (see Closure.resolveRootsFrontier), so constraint
+    // Unions of same-lineage checkpointed parts trip Catalyst's union
+    // constraint rewriting (AttributeMap key-not-found), so constraint
     // propagation is off for the loop.
     val confKey = "spark.sql.constraintPropagation.enabled"
     val prevConf = spark.conf.getOption(confKey)

@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, ExecutionException, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, ExecutionException}
 
 import scala.jdk.CollectionConverters._
 
@@ -89,9 +89,12 @@ class ConvoyPipelineSpec extends SparkSuite {
       (22L, 7L, None, Some(12L), None),
       (23L, 7L, None, None, Some(13L)))
       .toDF("tweet_id", "conversation_id", "in_reply_to", "quotes", "retweet_of")
-    val edges = ConvoyPipeline.conversationEdges(tweets)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val edgesDf = ConvoyPipeline.conversationEdges(tweets)
+    val edges = edgesDf.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(edges == Map(1L -> 2L, 7L -> 5L))
+    // the winner is picked by a hash aggregate, not a sort-based one
+    val plan = edgesDf.queryExecution.executedPlan.toString
+    assert(plan.contains("HashAggregate") && !plan.contains("SortAggregate"), plan)
   }
 
   test("marts write to disk; id-list text sink reads back (S2/K4)") {
@@ -102,32 +105,6 @@ class ConvoyPipelineSpec extends SparkSuite {
       .collect().map(_.getString(0).toLong).toSet
     assert(ids == Set(100L, 50L))
     assert(spark.read.parquet(s"$dir/_quarantine").count() == 1)
-  }
-
-  private val FlushMarker = "graft.flushMarker"
-
-  /** Runs `body` with `listener` registered and returns once the
-    * listener has seen every event `body` caused: a marker job (local
-    * property `FlushMarker`) flushes the listener queue, whose events
-    * arrive in order. */
-  private def listening(listener: SparkListener)(body: => Unit): Unit = {
-    val flushed = new CountDownLatch(1)
-    val marker = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(FlushMarker) != null) flushed.countDown()
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    sc.addSparkListener(marker)
-    try {
-      body
-      sc.setLocalProperty(FlushMarker, "1")
-      try spark.range(1).count() finally sc.setLocalProperty(FlushMarker, null)
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener queue did not drain")
-    } finally {
-      sc.removeSparkListener(marker)
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("each stage is derived once: the pages are scanned once per run, not once per sink") {
@@ -163,7 +140,7 @@ class ConvoyPipelineSpec extends SparkSuite {
       val dir = Files.createTempDirectory("pipeline_group").toString
       listening(new SparkListener {
         override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (e.properties.getProperty(FlushMarker) == null)
+          if (!flushing(e.properties))
             seen.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
       }) {
         sc.setJobGroup(group, "ConvoyPipelineSpec")
